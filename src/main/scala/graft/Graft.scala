@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.GraftFunctions
+
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point for users switching from the reference pipeline:
@@ -36,9 +38,11 @@ import org.apache.spark.sql.SparkSession
 object Graft {
 
   /** Register the graft expression library on an existing session
-    * (idempotent; see [[graft.functions.GraftFunctions]] for the list). */
+    * (idempotent; see [[graft.functions.GraftFunctions]] for the list). Call
+    * it before the session's first query: it also sizes Spark's
+    * generated-class cache, which is fixed at the first compile. */
   def init(spark: SparkSession): SparkSession = {
-    graft.functions.GraftFunctions.register(spark)
+    GraftFunctions.register(spark)
     spark
   }
 
@@ -53,6 +57,7 @@ object Graft {
         shufflePartitions.getOrElse(cores).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(GraftFunctions.CodegenCacheKey, GraftFunctions.CodegenCacheEntries.toString)
       .getOrCreate()
     init(s)
   }

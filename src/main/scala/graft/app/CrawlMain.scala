@@ -1,5 +1,6 @@
 package graft.app
 
+import graft.Graft
 import graft.crawl.CrawlEpoch
 import graft.gen.SyntheticCorpus
 
@@ -42,6 +43,8 @@ object CrawlMain {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // before the first query: the seed commit below is the first codegen
+    Graft.init(spark)
 
     val pages = SyntheticCorpus.pages(spark, nPages)
     val images = SyntheticCorpus.images(spark, nImages)

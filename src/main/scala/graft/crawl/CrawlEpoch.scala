@@ -508,7 +508,9 @@ object CrawlEpoch {
         val checkedSide =
           if (smallSchedule) broadcast(checkedImages) else checkedImages
         val out = licensed.join(checkedSide, Seq("image_id"), "left")
-          .withColumn("epoch", lit(epoch))
+          // referenced, not inlined: an epoch-number literal would make this
+          // stage's generated source new text, and a fresh compile, per epoch
+          .withColumn("epoch", GraftFunctions.referencedLong(epoch))
           .observe(obs,
             count(when(col("fetch_status") === 200, 1)).as("fetched"),
             count(when(col("license_abbr").isNotNull, 1)).as("licensed"),

@@ -214,9 +214,15 @@ abstract class SidecarProbe extends TernaryExpression {
   override protected def nullSafeEval(h: Any, r: Any, i: Any): Any =
     java.lang.Boolean.valueOf(probe(root, snapId, shardCount, h.asInstanceOf[Long]))
 
+  // root and snapshot id ride as references, not inlined constants: every
+  // epoch probes a new snapshot id, and an inlined id would make each
+  // epoch's generated source new text — a fresh compile of every class in
+  // the probing stage instead of a generated-class cache hit
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val rootRef = ctx.addReferenceObj("probeRoot", root)
-    defineCodeGen(ctx, ev, (h, _, _) => s"$probeMethod($rootRef, ${snapId}L, $shardCount, $h)")
+    val idRef = ctx.addReferenceObj("probeSnapshot", java.lang.Long.valueOf(snapId))
+    defineCodeGen(ctx, ev, (h, _, _) =>
+      s"$probeMethod($rootRef, $idRef.longValue(), $shardCount, $h)")
   }
 }
 

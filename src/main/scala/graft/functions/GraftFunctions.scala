@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.slf4j.LoggerFactory
 
 /** Registration + Column facade for the graft expression library.
   *
@@ -37,18 +40,87 @@ object GraftFunctions {
     "shingle_set" -> (es => ShingleSet(es(0), es(1))),
     "sorted_pairs" -> (es => SortedPairs(es.head)),
     "bounded_min_list" -> (es => BoundedMinList(es(0),
-      es(1).eval().asInstanceOf[Int])),
-    "lang_decision" -> (es => LangDecision(es.head,
-      es.tail.map(_.eval().asInstanceOf[Double]))),
+      integralArg("bounded_min_list", es, 1, "positive INT")(k => k >= 1 && k <= Int.MaxValue)
+        .toInt)),
+    "lang_decision" -> { es =>
+      val nLangs = LangHeuristic.langStops.size
+      if (es.size != nLangs + 1) throw mismatch("lang_decision", es, "WRONG_NUM_ARG_TYPES",
+        "expectedNum" -> (nLangs + 1).toString, "actualNum" -> es.size.toString)
+      LangDecision(es.head, es.indices.tail.map(i =>
+        literalArg("lang_decision", es, i, "DOUBLE") {
+          case (_: NumericType, d: Decimal) => d.toDouble
+          case (_: NumericType, n: Number) => n.doubleValue
+        }))
+    },
+    "referenced_long" -> (es => ReferencedLong(
+      integralArg("referenced_long", es, 0, "BIGINT")(_ => true))),
     "bloom_might_contain" -> (es => graft.frontier.BloomMightContain(es(0), es(1), es(2))),
     "cuckoo_might_contain" -> (es => graft.frontier.CuckooMightContain(es(0), es(1), es(2))),
     "constraint_barrier" -> (es => graft.frontier.ConstraintBarrier(es.head))
   )
 
-  @volatile private var registered: Set[SparkSession] = Set.empty
+  /** Value of argument `i` of `fn`, which must be a non-null literal that
+    * `pick` accepts (it sees the argument's type and value). Anything else
+    * fails analysis with an [[AnalysisException]] naming the argument, not a
+    * ClassCastException in the builder or a task. */
+  private def literalArg[T](fn: String, es: Seq[Expression], i: Int, required: String)(
+      pick: PartialFunction[(DataType, Any), T]): T = {
+    val e = es(i)
+    if (!e.foldable)
+      throw mismatch(fn, es, "NON_FOLDABLE_INPUT", "inputName" -> s"argument ${i + 1}",
+        "inputType" -> required, "inputExpr" -> e.sql)
+    val v = e.eval()
+    if (v == null) throw mismatch(fn, es, "UNEXPECTED_NULL", "exprName" -> s"argument ${i + 1}")
+    pick.applyOrElse((e.dataType, v), (_: (DataType, Any)) =>
+      throw mismatch(fn, es, "UNEXPECTED_INPUT_TYPE", "paramIndex" -> (i + 1).toString,
+        "requiredType" -> required, "inputSql" -> e.sql, "inputType" -> e.dataType.sql))
+  }
 
+  private def integralArg(fn: String, es: Seq[Expression], i: Int, required: String)(
+      ok: Long => Boolean): Long =
+    literalArg(fn, es, i, required) {
+      case (ByteType | ShortType | IntegerType | LongType, n: Number) if ok(n.longValue) =>
+        n.longValue
+    }
+
+  private def mismatch(fn: String, es: Seq[Expression], subClass: String,
+      params: (String, String)*) = new AnalysisException(s"DATATYPE_MISMATCH.$subClass",
+    Map("sqlExpr" -> s"\"$fn(${es.map(_.sql).mkString(", ")})\"") ++ params)
+
+  /** Spark's generated-class cache key (a static SQL conf: read once, when
+    * `CodeGenerator` first compiles, into an LRU of this many classes). */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Generated-class cache size. Spark's default of 100 is below this
+    * engine's working set: one pipelined crawl compiles ~350 classes and one
+    * pass of the 45 queries ~400, so at 100 every class is evicted before its
+    * plan runs again, and each recompile is a fresh JVM class the JIT warms
+    * from scratch. 2048 holds both sets with headroom. */
+  val CodegenCacheEntries = 2048
+
+  @volatile private var registered: Set[SparkSession] = Set.empty
+  // whether this JVM's first register already checked for an earlier compile
+  // (later sessions find the classes the first one compiled)
+  @volatile private var compileChecked = false
+
+  /** Register the expression library on `spark` (idempotent) and, the first
+    * time a session is seen, size the generated-class cache to
+    * [[CodegenCacheEntries]] unless the key was set explicitly. Set on the
+    * session conf, not `spark.conf`, which rejects static keys; the value
+    * takes effect only if no class has been compiled in this JVM yet. */
   def register(spark: SparkSession): Unit = synchronized {
     if (!registered.contains(spark)) {
+      val conf = spark.sessionState.conf
+      if (!conf.contains(CodegenCacheKey)) {
+        conf.setConfString(CodegenCacheKey, CodegenCacheEntries.toString)
+        if (!compileChecked && CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0)
+          LoggerFactory.getLogger(getClass).warn(
+            s"generated classes were compiled before the graft library was " +
+            s"registered, so $CodegenCacheKey keeps the size it was created " +
+            s"with; register before the first query to size it to " +
+            s"$CodegenCacheEntries")
+      }
+      compileChecked = true
       builders.foreach { case (name, b) =>
         spark.sessionState.functionRegistry
           .createOrReplaceTempFunction(name, b, "built-in")
@@ -87,6 +159,7 @@ object GraftFunctions {
   def boundedMinList(e: Column, k: Int): Column =
     call_function("bounded_min_list", e, lit(k))
   def constraintBarrier(e: Column): Column = call_function("constraint_barrier", e)
+  def referencedLong(v: Long): Column = call_function("referenced_long", lit(v))
 
   /** The 11 license metadata columns of the C5 schema from one extract-struct
     * column (the projection step of `license_annotator.py:53-71`), with

@@ -130,4 +130,39 @@ class OptimizationR6Spec extends SparkSpecBase {
     val deTokens = "der " + Seq.fill(20)("zz").mkString(" ")
     assert(decide(deTokens)._1 === null)
   }
+
+  private def analysisError(sqlExpr: String): String = {
+    GraftFunctions.register(spark)
+    val df = spark.range(3).selectExpr("id", "cast(id AS string) AS s")
+    intercept[org.apache.spark.sql.AnalysisException](df.selectExpr(sqlExpr)).getCondition
+  }
+
+  test("bounded_min_list: a non-literal, NULL or non-positive bound fails analysis") {
+    assert(analysisError("bounded_min_list(id, id)") === "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT")
+    assert(analysisError("bounded_min_list(id, CAST(NULL AS INT))") ===
+      "DATATYPE_MISMATCH.UNEXPECTED_NULL")
+    for (bad <- Seq("'2'", "2.0", "0", "-1", "3000000000L"))
+      assert(analysisError(s"bounded_min_list(id, $bad)") ===
+        "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", bad)
+    // any integral literal in INT range is a bound, BIGINT included
+    val got = spark.range(5).selectExpr("bounded_min_list(id, 2L) AS m").head().getSeq[Long](0)
+    assert(got === Seq(0L, 1L))
+  }
+
+  test("bounded_min_list: an unorderable input fails analysis") {
+    assert(analysisError("bounded_min_list(map(id, s), 2)") ===
+      "DATATYPE_MISMATCH.INVALID_ORDERING_TYPE")
+  }
+
+  test("lang_decision: thresholds must be one numeric literal per language") {
+    val ths = LangHeuristic.langStops.map(_ => "0.05")
+    def call(args: Seq[String]) = s"lang_decision(s, ${args.mkString(", ")})"
+    assert(analysisError(call("id" +: ths.tail)) === "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT")
+    assert(analysisError(call("'x'" +: ths.tail)) === "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE")
+    assert(analysisError(call(ths.tail)) === "DATATYPE_MISMATCH.WRONG_NUM_ARG_TYPES")
+    // decimal (SQL's 0.05) and integer literals are thresholds like doubles
+    val df = spark.range(1).selectExpr("'the weather is nice' AS s")
+    val lang = df.selectExpr(s"${call("0" +: ths.tail)}.language").head().getString(0)
+    assert(lang === "en")
+  }
 }
