@@ -149,11 +149,10 @@ object CrawlEpoch {
     val outTable = new SnapshotTable(s"$stateRoot/out", spark, epochOrdered = true)
 
     def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
       // Job-group label per stage thread (thread-local in SparkContext):
-      // lets a listener attribute every Spark job to its epoch+stage — the
-      // floor-attack measurement map. Always set (cheap, thread-local);
-      // only a listener (e.g. Bench's SPARK_GRAFT_JOBSTATS=1) consumes it.
+      // lets a listener attribute every Spark job to its epoch+stage. Always
+      // set (cheap); perfbench's `--trace 1` listener consumes it and reports
+      // `crawl.<stage>.busy_s`.
       // The CALLER's group is restored afterwards, not cleared — a caller
       // wrapping run() in its own job group (e.g. for cancelJobGroup
       // watchdogs) must keep it on this thread after we return.
@@ -161,13 +160,24 @@ object CrawlEpoch {
       val prev = Seq("spark.jobGroup.id", "spark.job.description",
         "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
       sc.setJobGroup(s"e$epoch-$name", s"epoch $epoch $name")
-      val a =
-        try f
-        finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      if (sys.env.contains("SPARK_GRAFT_TRACE"))
-        System.err.println(f"[epoch $epoch] $name%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      a
+      try f
+      finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
+
+    // The epoch's INPUT frontier, pinned for every stage that reads it. On a
+    // resume after this epoch's frontier stage committed, the current
+    // snapshot is the epoch's OUTPUT: walk back over every commit of this
+    // epoch (its frontier stage's, a re-commit after a lost marker, a
+    // requeue delta) to the snapshot the first of them replaced.
+    def inputOf(id: Option[Long]): Option[Long] = id.flatMap(frontier.manifest) match {
+      case Some(m) if m.path("lineage").path("epoch").asText == epoch.toString =>
+        inputOf(Some(m.get("parent_id").asLong).filter(_ > 0L))
+      case _ => id
+    }
+    // an input expired since (expireState) falls back to the current snapshot
+    val frontierIn = inputOf(frontier.currentSnapshotId)
+      .filter(frontier.manifest(_).isDefined).orElse(frontier.currentSnapshotId)
+    def frontierInput(): DataFrame = frontierIn.fold(frontier.read())(frontier.readAt)
 
     // --- stage 0: robots cache (north rule "robots.txt caching") -------------
     // The robots source models the live web: fetching is per-host work, so
@@ -213,7 +223,7 @@ object CrawlEpoch {
         case (Some(_), Some(c), Some(s)) => c + s
         case _                           => Long.MaxValue
       }
-      val hosts = frontier.read()
+      val hosts = frontierInput()
         .select(GraftFunctions.urlHost(col("url")).as("host")).distinct()
       val missing = known.fold(hosts)(k =>
         hosts.join(k.select(col("host")), Seq("host"), "left_anti"))
@@ -246,9 +256,15 @@ object CrawlEpoch {
     // per-epoch-floor case. No counting job is ever run for this. Also
     // drives the empty-epoch short-circuits below: 0 frontier rows means
     // the schedule/robots/frontier stages provably have nothing to compute.
-    val frontierRowsExact = frontier.currentSnapshotId.flatMap(frontier.manifest)
+    val frontierRowsExact = frontierIn.flatMap(frontier.manifest)
       .map(_.get("row_count").asLong).getOrElse(Long.MaxValue)
-    if (!schedTable.stageDone(epoch, "scheduled")) timed("schedule") {
+    // a schedule commit whose marker a crash lost is reused, not redone
+    // (once later stages grew the seen set, a redo picks different URLs);
+    // it is found by lineage, since the crash may also have lost the
+    // `current` flip, so `scheduled` below is read from the same snapshot
+    val scheduleDone = schedTable.stageDone(epoch, "scheduled") ||
+      schedTable.snapshotForLineage("epoch", epoch.toString).isDefined
+    if (!scheduleDone) timed("schedule") {
       // empty frontier ⇒ empty schedule: typed manifest-only commit from
       // the parent schedule's recorded schema (first epoch has no parent —
       // the general path writes the schema then)
@@ -262,7 +278,7 @@ object CrawlEpoch {
           Map("epoch" -> epoch.toString, "stage" -> "scheduled"))
         schedTable.markStage(epoch, "scheduled")
       } else {
-        val normalized = Scheduler.normalize(frontier.read())
+        val normalized = Scheduler.normalize(frontierInput())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val sch = Scheduler.scheduleFromNormalized(normalized, seen,
@@ -274,13 +290,13 @@ object CrawlEpoch {
         } finally normalized.unpersist(blocking = false)
       }
     }
-    val scheduled = schedTable.read()
+    val schedSnap = schedTable.snapshotForLineage("epoch", epoch.toString)
+    val scheduled = schedSnap.fold(schedTable.read())(schedTable.readAt)
 
     // Stages 2 (out), 3 (seen) and 4 (frontier) depend only on the committed
     // schedule + static corpus tables — run them as CONCURRENT Spark jobs so
     // the epoch's wall clock is schedule + max(2,3,4), not the sum, and tasks
     // from one stage fill cores the others leave idle.
-    val schedSnap = schedTable.snapshotForLineage("epoch", epoch.toString)
     val schedRows = schedSnap.flatMap(schedTable.manifest)
       .map(_.get("row_count").asLong).getOrElse(Long.MaxValue)
     // EMPTY-EPOCH SHORT-CIRCUITS (manifest-exact counts, never a job): a
@@ -530,7 +546,7 @@ object CrawlEpoch {
     // --- stage 3: seen-set update (incremental: delta snapshot + merged
     // Bloom shards; per-epoch cost is O(scheduled), not O(all keys ever)) ----
     def runSeenStage(): Unit =
-      if (!new java.io.File(s"$stateRoot/seen/stages/e$epoch-seen").exists()) {
+      if (!seen.table.stageDone(epoch, "seen")) {
         // 0 scheduled rows ⇒ no new keys: the set is unchanged, marker only
         if (!emptySchedule)
           seen.add(scheduled.select(col("url_hash")), Map("epoch" -> epoch.toString))
@@ -574,7 +590,7 @@ object CrawlEpoch {
             .select(explode(col("__links")).as("url"))
       val links = links0.withColumn("priority", lit(linkPriorityDecay))
         .withColumn("retries", lit(0)) // discovered URLs start a fresh budget
-      val backlog0 = frontier.read() // URLs not scheduled this epoch stay queued
+      val backlog0 = frontierInput() // URLs not scheduled this epoch stay queued
       val backlog = // legacy pre-retries frontiers read as retries = 0; a
         // MIXED delta chain (legacy parent dirs + new deltas) reads legacy
         // rows as NULL, which must also mean 0 — an unguarded null would
@@ -616,25 +632,17 @@ object CrawlEpoch {
     import scala.concurrent.duration.Duration
     implicit val ec = CrawlEpoch.stageEc
     val outF = Future(timed("out")(runOutStage()))
-    // Robots marker-only shortcut guard: frontierRowsExact reads the
-    // CURRENT frontier snapshot — after a crash between the frontier-stage
-    // commit and the robots marker, resume sees the POST-epoch frontier,
-    // and if that one is empty the shortcut would silently skip the
-    // epoch's robots verdict delta (ADVICE r5). The shortcut is only
-    // justified when the observed frontier is still this epoch's INPUT,
-    // i.e. the frontier stage has not yet committed for this epoch.
-    val robotsEmptyOk = frontierRowsExact == 0L &&
-      !frontier.stageDone(epoch, "frontier")
+    // robots marker-only shortcut: an empty INPUT frontier has no hosts
     Await.result(Future.sequence(Seq(
       Future(timed("seen")(runSeenStage())),
       Future(timed("frontier")(runFrontierStage())),
-      Future(timed("robots")(runRobotsStage(robotsEmptyOk))))),
+      Future(timed("robots")(runRobotsStage(frontierRowsExact == 0L))))),
       Duration.Inf)
 
     RunningEpoch(
       epoch = epoch,
-      scheduled = schedTable.snapshotForLineage("epoch", epoch.toString)
-        .flatMap(schedTable.manifest).map(_.get("row_count").asLong).getOrElse(0L),
+      scheduled = schedSnap.flatMap(schedTable.manifest)
+        .map(_.get("row_count").asLong).getOrElse(0L),
       newFrontier = frontier.snapshotForLineage("epoch", epoch.toString)
         .flatMap(frontier.manifest).map(_.get("row_count").asLong).getOrElse(0L),
       outDone = outF,

@@ -53,14 +53,6 @@ private[frontier] object ProbeCacheBudget {
   private[frontier] def registered(cache: TwoGenCache[_], key: String): Unit =
     insertOrder.add((cache, key))
 
-  /** Test seam: drop EVERY registered entry (all probe caches) and return
-    * the ledger to zero — lets an A/B measure cold-cache load counts per
-    * arm instead of inheriting the previous arm's residency. */
-  private[frontier] def clearForTest(): Unit = {
-    var v = insertOrder.poll()
-    while (v != null) { v._1.removeForBudget(v._2); v = insertOrder.poll() }
-  }
-
   /** Called after an insert grew `totalBytes` past the budget: evict
     * oldest-inserted keys across ALL caches, sparing the key just inserted
     * (evicting it would guarantee a reload on the very next row). */
@@ -127,26 +119,20 @@ object BloomProbe {
 
   private val cache = new TwoGenCache[BloomFilter](bf => bf.bitSize() / 8)
 
-  /** Opt-in instrumentation for the shard-routing A/B ([[graft.ProbeShardRoute]]
-    * and ShardRouteSpec): when on, every probe records (taskPartitionId,
-    * shard) — the per-TASK shard working set, the quantity shard-routed
-    * probing bounds at 1. Off (the default) costs one static volatile read
-    * per row. Loads/loadedBytes count actual shard-file deserializations —
-    * with a byte-capped cache they are the re-read cost routing eliminates. */
+  /** Opt-in instrumentation for ShardRouteSpec: when on, every probe
+    * records (taskPartitionId, shard) — the per-TASK shard working set,
+    * which shard-routed probing bounds at 1 (A/B: BASELINE.md round 5,
+    * "Shard-routed seen-probing"; code in git history at `a799ee3`). Off
+    * (the default) costs one static volatile read per row. */
   @volatile private[graft] var trackTouches: Boolean = false
   private[graft] val touches =
     java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Int)]()
-  private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] val loadedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def resetTracking(): Unit = {
-    touches.clear(); loads.set(0L); loadedBytes.set(0L)
-  }
+  private[graft] def resetTracking(): Unit = touches.clear()
 
   private[graft] def filterFor(root: String, id: Long, shard: Int): BloomFilter =
     cache.get(s"$root#$shard", id) {
       val bytes = Files.readAllBytes(
         Paths.get(root, "snapshots", s"bloom-v$id-s$shard.bin"))
-      if (trackTouches) { loads.incrementAndGet(); loadedBytes.addAndGet(bytes.length) }
       BloomFilter.readFrom(new ByteArrayInputStream(bytes))
     }
 
@@ -156,7 +142,6 @@ object BloomProbe {
     ProbeCacheBudget.budgetOverride = b
   private[graft] def cacheStats: (Int, Long) =
     (cache.entryCount, ProbeCacheBudget.totalBytes.get())
-  private[graft] def clearCacheForTest(): Unit = ProbeCacheBudget.clearForTest()
 
   /** Static probe entry point for generated code (whole-stage codegen calls
     * this directly — no boxing, no UDF wrapper). `shardCount` is resolved

@@ -62,8 +62,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *        OR-merge): recorded in `bloom-meta.json`, recorded value wins on
   *        an existing root. The residency/confirm-work dial at scale —
   *        3% cuts resident filter bytes ~1.6× vs 1% at the cost of ~3× the
-  *        exact-join confirms on unseen probes (measured: ProbeFppSweep,
-  *        BASELINE.md round 5).
+  *        exact-join confirms on unseen probes (measured: BASELINE.md
+  *        round 5, "Bloom fpp sweep at 50M keys"; code in git history at
+  *        `a799ee3`).
   */
 final class SeenSet(root: String, spark: SparkSession,
     expectedKeys: Long = SeenSet.DefaultExpectedKeys,

@@ -9,6 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class CrawlEpochSpec extends SparkSpecBase {
 
@@ -405,6 +406,10 @@ class CrawlEpochSpec extends SparkSpecBase {
     val seenB = new graft.frontier.SeenSet(s"$rootB/seen", spark).keys()
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(seenA === seenB, "expiry changed the seen set")
+    // a restarted CrawlMain loop re-runs a finished epoch over the expired
+    // root (its input frontier is gone): every stage is done, nothing moves
+    CrawlEpoch.run(rootB, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 3)
+    assert(outSorted(rootA) === outSorted(rootB), "re-running a finished epoch changed its output")
     // the expired root keeps only the newest frontier generation's manifest
     val fB = CrawlEpoch.frontierTable(rootB, spark)
     val cur = fB.currentSnapshotId.get
@@ -445,6 +450,20 @@ class CrawlEpochSpec extends SparkSpecBase {
     assert(cur === Set(10L, 11L, 13L))
   }
 
+  /** Every table a resumed epoch must reproduce, as sorted row strings:
+    * out (the sink), the epoch's schedule, frontier, seen keys and the
+    * robots cache. */
+  private def epochState(root: String, epoch: Long): Map[String, Seq[String]] = {
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val sched = new SnapshotTable(s"$root/scheduled", spark)
+    Map(
+      "out" -> outSorted(root),
+      "scheduled" -> rows(sched.readAt(sched.snapshotForLineage("epoch", epoch.toString).get)),
+      "frontier" -> rows(CrawlEpoch.frontierTable(root, spark).read()),
+      "seen" -> rows(new graft.frontier.SeenSet(s"$root/seen", spark).keys()),
+      "robots" -> rows(new SnapshotTable(s"$root/robots", spark).read()))
+  }
+
   test("mid-epoch resume: pre-completed schedule stage is not redone and output matches a clean run") {
     val (pages, images, seeds, robots) = corpus()
     val rootA = Files.createTempDirectory("crawlB1").toString
@@ -465,5 +484,63 @@ class CrawlEpochSpec extends SparkSpecBase {
     CrawlEpoch.run(rootB, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
     assert(schedB.currentSnapshotId.get === schedSnapshotBefore, "schedule stage was redone")
     assert(outSorted(rootA) === outSorted(rootB), "resumed run diverged from clean run")
+  }
+
+  // Crash matrix: a crash between a stage's commit and its marker leaves the
+  // commit in place and the marker missing. For each stage, run the epoch to
+  // completion, delete only that stage's marker and run the epoch again: the
+  // resumed state must equal a clean run's.
+  private lazy val cleanEpochState = {
+    val (pages, images, seeds, robots) = corpus()
+    val root = Files.createTempDirectory("crawlClean").toString
+    CrawlEpoch.seed(root, spark, seeds)
+    CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
+    epochState(root, 1)
+  }
+
+  for (stage <- Seq("scheduled", "seen", "frontier", "robots", "out"))
+    test(s"crash between commit and marker: $stage stage resumes to the clean-run state") {
+      val (pages, images, seeds, robots) = corpus()
+      val root = Files.createTempDirectory(s"crawlLost-$stage").toString
+      CrawlEpoch.seed(root, spark, seeds)
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
+      val marker = java.nio.file.Paths.get(root, stage, "stages", s"e1-$stage")
+      assert(Files.deleteIfExists(marker), s"no $stage marker at $marker")
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
+      val resumed = epochState(root, 1)
+      for ((table, rows) <- cleanEpochState)
+        assert(resumed(table) === rows, s"$table diverged after resuming a lost $stage marker")
+    }
+
+  test("crash between the schedule manifest and its current flip: resume reads the epoch's own schedule") {
+    val (pages, images, seeds, robots) = corpus()
+    val rootA = Files.createTempDirectory("crawlFlipA").toString
+    val rootB = Files.createTempDirectory("crawlFlipB").toString
+    for (root <- Seq(rootA, rootB)) {
+      CrawlEpoch.seed(root, spark, seeds)
+      CrawlEpoch.run(root, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 1)
+    }
+    CrawlEpoch.run(rootA, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 2)
+    // root B gets epoch 2's schedule manifest and data as the crash left
+    // them: no `current` flip (still epoch 1's), no marker, no later stage
+    val schedA = new SnapshotTable(s"$rootA/scheduled", spark)
+    val sid = schedA.snapshotForLineage("epoch", "2").get
+    val schedB = new SnapshotTable(s"$rootB/scheduled", spark)
+    val e1Sid = schedB.currentSnapshotId.get
+    assert(sid > e1Sid && schedB.manifest(sid).isEmpty)
+    val dataA = java.nio.file.Paths.get(rootA, "scheduled", "data", s"s$sid")
+    val walk = Files.walk(dataA)
+    try walk.iterator().asScala.foreach { p =>
+      Files.copy(p, java.nio.file.Paths.get(rootB, "scheduled", "data", s"s$sid")
+        .resolve(dataA.relativize(p)))
+    } finally walk.close()
+    val manifestA = java.nio.file.Paths.get(rootA, "scheduled", "snapshots", s"v$sid.json")
+    Files.write(java.nio.file.Paths.get(rootB, "scheduled", "snapshots", s"v$sid.json"),
+      new String(Files.readAllBytes(manifestA), "UTF-8").replace(rootA, rootB).getBytes("UTF-8"))
+    CrawlEpoch.run(rootB, spark, pages, images, Some(robots), budgetPerHost = 5, epoch = 2)
+    assert(schedB.snapshotForLineage("epoch", "2") === Some(sid), "schedule stage was redone")
+    val (clean, resumed) = (epochState(rootA, 2), epochState(rootB, 2))
+    for ((table, rows) <- clean)
+      assert(resumed(table) === rows, s"$table diverged after resuming a lost current flip")
   }
 }
